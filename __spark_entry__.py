@@ -371,11 +371,6 @@ def q_language_id(spark, sf_dir):
     return language_id(_docs(spark, sf_dir))
 
 
-def q_fingerprints(spark, sf_dir):
-    from dragnet_spark.operators.text_analysis import fingerprints
-    return fingerprints(_docs(spark, sf_dir))
-
-
 def q_dedup_exact(spark, sf_dir):
     from dragnet_spark.operators.dedup import exact_duplicates
     # md5-only aggregation: the spread guard's shuffle is pure cost here
@@ -950,27 +945,6 @@ def q_training_corpus_funnel(spark, sf_dir):
         [(int(agg['n_extracted_ok']), int(agg['n_quality_pass']),
           int(agg['n_canonical']))],
         'n_extracted_ok long, n_quality_pass long, n_canonical long')
-
-
-def q_events_props_json(spark, sf_dir):
-    """Semi-structured payload parsing: events.props JSON parsed
-    JVM-side (from_json, whole-stage codegen -- no Python) and the k
-    field aggregated per event_type; missing/corrupt payloads counted
-    as n_missing, never dropped."""
-    from dragnet_spark.operators.semistructured import json_props_stats
-    return json_props_stats(
-        spark.read.parquet(f'{sf_dir}/events.parquet'))
-
-
-def q_events_props_variant(spark, sf_dir):
-    """Spark 4 VARIANT path for the same payload aggregation:
-    try_parse_json -> try_variant_get typed extraction (schema-on-read;
-    no struct re-declaration as payload fields grow).  Shares the
-    events_props_json DuckDB oracle -- both engines and both Spark
-    paths must agree."""
-    from dragnet_spark.operators.semistructured import variant_props_stats
-    return variant_props_stats(
-        spark.read.parquet(f'{sf_dir}/events.parquet'))
 
 
 def q_gold_corrected_source(spark, sf_dir):

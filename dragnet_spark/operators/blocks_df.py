@@ -14,6 +14,7 @@ import pyarrow as pa
 
 from ..kernels.features import DEFAULT_FEATURES, compute
 from ..model import default_model
+from ..plans.arrow_stage import map_rows
 from .extract import STATUS_OK, blockify_spans
 
 BLOCKS_PA_SCHEMA = pa.schema([
@@ -36,17 +37,9 @@ BLOCKS_PA_SCHEMA = pa.schema([
     ('status', pa.string()),
 ])
 
-BLOCKS_DDL = (
-    'doc_id string, block_idx int, text string, link_density double, '
-    'text_density double, link_tokens array<string>, tagcount int, '
-    'tagcount_since_last_block int, anchor_count int, '
-    'min_depth_since_last_block int, block_start_tag string, '
-    'ancestors array<int>, '
-    'class_weights array<struct<tag_id:int,weight:int>>, '
-    'features array<double>, pred int, status string')
-
 
 def doc_to_block_rows(doc_id, spans, model, features=DEFAULT_FEATURES):
+    """One document -> its ``BLOCKS_PA_SCHEMA`` row tuples."""
     _, _, all_blocks, status = blockify_spans(spans)
     mat = None
     preds = None
@@ -59,26 +52,21 @@ def doc_to_block_rows(doc_id, spans, model, features=DEFAULT_FEATURES):
     rows = []
     for i, b in enumerate(all_blocks):
         f = b.features
-        rows.append({
-            'doc_id': doc_id,
-            'block_idx': i,
-            'text': b.text,
-            'link_density': b.link_density,
-            'text_density': b.text_density,
-            'link_tokens': b.link_tokens,
-            'tagcount': f.get('tagcount', 0),
-            'tagcount_since_last_block': f.get('tagcount_since_last_block', 0),
-            'anchor_count': f.get('anchor_count', 0),
-            'min_depth_since_last_block': f.get('min_depth_since_last_block', 0),
-            'block_start_tag': f.get('block_start_tag', ''),
-            'ancestors': f.get('ancestors', []),
-            'class_weights': [
-                {'tag_id': t, 'weight': w}
-                for t, w in f.get('readability_class_weights', [])],
-            'features': list(mat[i]) if mat is not None else [],
-            'pred': int(preds[i]) if preds is not None else 0,
-            'status': status,
-        })
+        rows.append((
+            doc_id, i, b.text, b.link_density, b.text_density,
+            b.link_tokens,
+            f.get('tagcount', 0),
+            f.get('tagcount_since_last_block', 0),
+            f.get('anchor_count', 0),
+            f.get('min_depth_since_last_block', 0),
+            f.get('block_start_tag', ''),
+            f.get('ancestors', []),
+            [{'tag_id': t, 'weight': w}
+             for t, w in f.get('readability_class_weights', [])],
+            list(mat[i]) if mat is not None else [],
+            int(preds[i]) if preds is not None else 0,
+            status,
+        ))
     return rows
 
 
@@ -95,22 +83,15 @@ def synthesize_and_blockify(spark, sf_dir, amplification=1, model=None,
         return doc_to_block_rows(sid, span_dicts, model, features)
 
     return synthesize_fused(spark, sf_dir, per_doc, BLOCKS_PA_SCHEMA,
-                            BLOCKS_DDL, amplification, num_partitions)
+                            amplification, num_partitions)
 
 
 def blockify_df(df, model=None, features=DEFAULT_FEATURES):
     """DataFrame[(doc_id, spans)] -> exploded blocks DataFrame."""
     model = model or default_model()
 
-    def to_blocks(batches):
-        from .extract import _spans_rows
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            spans_col = _spans_rows(rb.column('spans'))
-            rows = []
-            for doc_id, spans in zip(doc_ids, spans_col):
-                rows.extend(doc_to_block_rows(doc_id, spans or [], model,
-                                              features))
-            yield pa.RecordBatch.from_pylist(rows, schema=BLOCKS_PA_SCHEMA)
+    def per_row(doc_id, spans):
+        return doc_to_block_rows(doc_id, spans, model, features)
 
-    return df.mapInArrow(to_blocks, BLOCKS_DDL)
+    return map_rows(df, per_row, BLOCKS_PA_SCHEMA,
+                    args=('doc_id', 'spans'))

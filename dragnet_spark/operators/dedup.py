@@ -22,11 +22,16 @@ The scale story (100 TB corpus):
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import pandas as pd
+import pyarrow as pa
 
 import pyspark.sql.functions as F
 
-from .text_analysis import tokens_col
+from ..plans.arrow_stage import map_rows
+from .text_analysis import TOKEN_PATTERN, tokens_col
 
 # -- exact ------------------------------------------------------------------
 
@@ -163,12 +168,6 @@ def jaccard_pairs(df, text_col='text', threshold=0.8):
 
 # -- MinHash-LSH --------------------------------------------------------------
 
-# max buffered output rows per yielded RecordBatch in the Arrow
-# explode stages (shingles, passage/gram sigs): bounds per-task python
-# memory the way the JVM Generate they replaced streamed in constant
-# space
-EXPLODE_FLUSH_ROWS = 1 << 16
-
 MINHASH_K = 32
 LSH_BANDS = 8
 LSH_ROWS = MINHASH_K // LSH_BANDS
@@ -221,51 +220,19 @@ def _shingle_stage(df, text_col, exploded):
     shape).  Shingle STRINGS are identical to the zip_with/concat_ws
     form, so every xxhash64 lane, LSH bucket and verified pair
     downstream is value-identical."""
-    import pyarrow as pa
-
-    from .text_analysis import TOKEN_PATTERN
-
+    tok_re = re.compile(TOKEN_PATTERN)
     src = df.select(F.col('doc_id'), F.col(text_col).alias('_text'))
-    id_ddl = src.schema['doc_id'].dataType.simpleString()
-    out_ddl = ('doc_id %s, sh string' % id_ddl if exploded
-               else 'doc_id %s, shingles array<string>' % id_ddl)
 
-    def gen(batches):
-        import re
-        tok_split = re.compile(TOKEN_PATTERN).split
-        for rb in batches:
-            ids = rb.column(0).to_pylist()
-            texts = rb.column(1).to_pylist()
-            if exploded:
-                id_type = rb.column(0).type
-                out_ids, out_sh = [], []
-                for did, t in zip(ids, texts):
-                    for s in _py_shingles(
-                            [x for x in tok_split((t or '').lower()) if x]):
-                        out_ids.append(did)
-                        out_sh.append(s)
-                    # bound per-task memory (see EXPLODE_FLUSH_ROWS)
-                    if len(out_ids) >= EXPLODE_FLUSH_ROWS:
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.array(out_ids, type=id_type),
-                             pa.array(out_sh, type=pa.string())],
-                            names=['doc_id', 'sh'])
-                        out_ids, out_sh = [], []
-                if out_ids:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(out_ids, type=id_type),
-                         pa.array(out_sh, type=pa.string())],
-                        names=['doc_id', 'sh'])
-            else:
-                shs = [_py_shingles(
-                    [x for x in tok_split((t or '').lower()) if x])
-                    for t in texts]
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(0),
-                     pa.array(shs, type=pa.list_(pa.string()))],
-                    names=['doc_id', 'shingles'])
+    def shingles(t):
+        return _py_shingles([x for x in tok_re.split((t or '').lower()) if x])
 
-    return src.mapInArrow(gen, out_ddl)
+    if exploded:
+        return map_rows(src, lambda t: ((s,) for s in shingles(t)),
+                        pa.schema([('sh', pa.string())]),
+                        passthrough=('doc_id',))
+    return map_rows(src, lambda t: ((shingles(t),),),
+                    pa.schema([('shingles', pa.list_(pa.string()))]),
+                    passthrough=('doc_id',))
 
 
 def shingle_df(df, text_col='text'):
@@ -684,61 +651,21 @@ def passage_sig_rows(df, text_col='text', id_col='doc_id',
     the same ASCII class the JVM form used (test-pinned agreement).
     Only (id, 16-byte sig) rows cross the boundary.
     """
-    import pyarrow as pa
-
-    from .text_analysis import TOKEN_PATTERN
-
+    tok_re = re.compile(TOKEN_PATTERN)
     src = df.select(F.col(id_col).alias('_id'),
                     F.col(text_col).alias('_text'))
-    id_ddl = src.schema['_id'].dataType.simpleString()
-    out_ddl = '_id %s, _sig binary' % id_ddl
+    fields = [('_sig', pa.binary())]
     if keep_passage:
-        out_ddl += ', passage string'
+        fields.append(('passage', pa.string()))
 
-    def gen(batches):
-        import hashlib
-        import re
-        tok_split = re.compile(TOKEN_PATTERN).split
-        md5 = hashlib.md5
-        for rb in batches:
-            id_type = rb.column(0).type
-            ids = rb.column(0).to_pylist()
-            texts = rb.column(1).to_pylist()
-            out_ids, out_sigs, out_ps = [], [], []
+    def per_row(t):
+        toks = [x for x in tok_re.split(t) if x] if t is not None else ()
+        for i in range(len(toks) - n + 1):
+            p = ' '.join(toks[i:i + n])
+            sig = hashlib.md5(p.encode('utf-8')).digest()
+            yield (sig, p) if keep_passage else (sig,)
 
-            def flush():
-                arrays = [pa.array(out_ids, type=id_type),
-                          pa.array(out_sigs, type=pa.binary())]
-                names = ['_id', '_sig']
-                if keep_passage:
-                    arrays.append(pa.array(out_ps, type=pa.string()))
-                    names.append('passage')
-                return pa.RecordBatch.from_arrays(arrays, names=names)
-
-            for did, t in zip(ids, texts):
-                if t is None:
-                    continue
-                toks = [x for x in tok_split(t) if x]
-                if len(toks) < n:
-                    continue
-                for i in range(len(toks) - n + 1):
-                    p = ' '.join(toks[i:i + n])
-                    out_ids.append(did)
-                    out_sigs.append(md5(p.encode('utf-8')).digest())
-                    if keep_passage:
-                        out_ps.append(p)
-                # bound per-task memory: the JVM Generate this replaced
-                # streamed rows in constant space, so flush the fan-out
-                # instead of buffering an input batch's whole expansion
-                # (fat docs x 1024-row batches would hold millions of
-                # python objects at once)
-                if len(out_ids) >= EXPLODE_FLUSH_ROWS:
-                    yield flush()
-                    out_ids, out_sigs, out_ps = [], [], []
-            if out_ids:
-                yield flush()
-
-    return src.mapInArrow(gen, out_ddl)
+    return map_rows(src, per_row, pa.schema(fields), passthrough=('_id',))
 
 
 def duplicated_passage_stats(rows, min_docs=2, keep_example=False):

@@ -23,30 +23,20 @@ import pyarrow as pa
 from ..kernels.blocks import BlockifyError, blockify
 from ..kernels.features import DEFAULT_FEATURES, compute
 from ..model import LogisticModel, default_model
+from ..plans.arrow_stage import map_rows, row_batches
+from ..sources.synthesis import SPANS_SCHEMA
 
 STATUS_OK = 'ok'
 STATUS_PARSE_ERROR = 'blockify_error'
 STATUS_TOO_FEW = 'too_few_blocks'
+STATUS_ERROR = 'error'
 
+# (doc_id, spans) in, (doc_id, spans, content_text, status) out
 EXTRACTED_PA_SCHEMA = pa.schema([
-    ('doc_id', pa.string()),
-    ('spans', pa.list_(pa.struct([
-        ('kind', pa.string()),
-        ('text', pa.string()),
-        ('media_ref', pa.string()),
-        ('offset', pa.int32()),
-    ]))),
+    *SPANS_SCHEMA,
     ('content_text', pa.string()),
     ('status', pa.string()),
 ])
-
-EXTRACTED_DDL = ('doc_id string, '
-                 'spans array<struct<kind:string,text:string,'
-                 'media_ref:string,offset:int>>, '
-                 'content_text string, status string')
-
-
-STATUS_ERROR = 'error'
 
 
 def _sanitize(spans):
@@ -207,72 +197,34 @@ def process_document(spans, model: LogisticModel,
     return out_spans, '\n'.join(kept_texts), status
 
 
-OUT_BATCH_BYTES = 32 << 20
+def extract_document(spans, model, features=DEFAULT_FEATURES,
+                     strip_link_tokens=False):
+    """:func:`process_document` with last-resort containment: one
+    pathological document becomes a ``STATUS_ERROR`` row, never a task
+    failure."""
+    try:
+        return process_document(spans, model, features,
+                                strip_link_tokens=strip_link_tokens)
+    except Exception:
+        return [], '', STATUS_ERROR
 
 
-def _spans_rows(spans_arr):
-    """ListArray<struct> -> per-row lists of span dicts via flat field
-    conversion: primitive child arrays convert to Python in one C pass
-    each, instead of one nested StructScalar per span (measured ~5% of
-    the extraction stage)."""
-    offsets = spans_arr.offsets.to_pylist()
-    flat = spans_arr.values
-    kinds = flat.field('kind').to_pylist()
-    texts = flat.field('text').to_pylist()
-    refs = flat.field('media_ref').to_pylist()
-    offs = flat.field('offset').to_pylist()
-    nulls = (spans_arr.is_null().to_pylist()
-             if spans_arr.null_count else None)
-    out = []
-    for i in range(len(spans_arr)):
-        if nulls is not None and nulls[i]:
-            out.append([])
-            continue
-        out.append([
-            {'kind': kinds[j], 'text': texts[j], 'media_ref': refs[j],
-             'offset': offs[j]}
-            for j in range(offsets[i], offsets[i + 1])])
-    return out
+def _extract_stage(model, features, strip_link_tokens):
+    """(per_row, out_schema, passthrough, args) of the extraction stage:
+    ``spans`` decoded, ``doc_id`` carried through."""
+    def per_row(spans):
+        return (extract_document(spans, model, features,
+                                 strip_link_tokens),)
+
+    return (per_row, EXTRACTED_PA_SCHEMA.remove(0), ('doc_id',),
+            ('spans',))
 
 
 def make_extract_fn(model, features=DEFAULT_FEATURES,
                     strip_link_tokens=False):
-    """Arrow-batch iterator function for ``DataFrame.mapInArrow``.
-
-    Output batches are flushed at a byte budget, not just a row count:
-    ``maxRecordsPerBatch`` caps rows, but 1024 outlier documents of a few
-    MB each would otherwise pin gigabytes per in-flight batch (SURVEY.md
-    §4 'Arrow batch sizing').
-    """
-
-    def extract_batches(batches):
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            spans_col = _spans_rows(rb.column('spans'))
-            rows = []
-            approx_bytes = 0
-            for doc_id, spans in zip(doc_ids, spans_col):
-                try:
-                    out_spans, content, status = process_document(
-                        spans or [], model, features,
-                        strip_link_tokens=strip_link_tokens)
-                except Exception:
-                    # last-resort containment: one pathological document
-                    # becomes a status row, never a task failure
-                    out_spans, content, status = [], '', STATUS_ERROR
-                rows.append({'doc_id': doc_id, 'spans': out_spans,
-                             'content_text': content, 'status': status})
-                approx_bytes += 2 * len(content) + 64
-                if approx_bytes >= OUT_BATCH_BYTES:
-                    yield pa.RecordBatch.from_pylist(
-                        rows, schema=EXTRACTED_PA_SCHEMA)
-                    rows = []
-                    approx_bytes = 0
-            if rows:
-                yield pa.RecordBatch.from_pylist(
-                    rows, schema=EXTRACTED_PA_SCHEMA)
-
-    return extract_batches
+    """Arrow-batch iterator function of the extraction stage (the
+    ``DataFrame.mapInArrow`` body of :func:`extract`)."""
+    return row_batches(*_extract_stage(model, features, strip_link_tokens))
 
 
 def extract(df, model=None, features=DEFAULT_FEATURES,
@@ -288,10 +240,7 @@ def extract(df, model=None, features=DEFAULT_FEATURES,
     verify with ``result.explain('formatted')`` that no Exchange appears.
     """
     model = model or default_model(to_extract)
-    return df.mapInArrow(
-        make_extract_fn(model, features,
-                        strip_link_tokens=strip_link_tokens),
-        EXTRACTED_DDL)
+    return map_rows(df, *_extract_stage(model, features, strip_link_tokens))
 
 
 def extract_content(df, model=None):

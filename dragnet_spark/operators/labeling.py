@@ -21,11 +21,14 @@ after it.  LCS is O(m*n) per doc and bounded by the uint16 token cap.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyarrow as pa
 
 from ..kernels.blocks import simple_tokenizer
 from ..kernels.features import DEFAULT_FEATURES, compute
 from ..kernels.lcs import check_inclusion_ex
+from ..plans.arrow_stage import map_rows
 from .extract import STATUS_OK, blockify_spans
 
 BLOCK_PCT_TOKENS_THRESH = 0.1
@@ -46,13 +49,6 @@ GOLD_BLOCKS_PA_SCHEMA = pa.schema([
     ('features', pa.list_(pa.float64())),
     ('truncated', pa.bool_()),
 ])
-
-GOLD_BLOCKS_DDL = (
-    'doc_id string, block_idx int, text string, content_frac double, '
-    'comments_frac double, all_tokens array<string>, '
-    'content_tokens array<string>, comments_tokens array<string>, '
-    'label_content int, label_comments int, weight int, '
-    'features array<double>, truncated boolean')
 
 
 def _frac_and_tokens(blocks_tokens, all_tokens, block_ids, gs_text):
@@ -144,6 +140,12 @@ def label_document(doc_id, spans, content_text, comments_text,
     return rows
 
 
+def _label_rows(doc_id, spans, content_text, comments_text, features):
+    """:func:`label_document` rows as ``GOLD_BLOCKS_PA_SCHEMA`` tuples."""
+    return [tuple(r.values()) for r in label_document(
+        doc_id, spans, content_text, comments_text, features)]
+
+
 def synthesize_and_label(spark, sf_dir, amplification=1,
                          features=DEFAULT_FEATURES, num_partitions=None):
     """Synthesis + blockify + LCS gold labeling in ONE python stage
@@ -154,11 +156,10 @@ def synthesize_and_label(spark, sf_dir, amplification=1,
     spans and their gold are born in the same kernel call)."""
     from ..sources.synthesis import synthesize_fused
 
-    def per_doc(sid, span_dicts, gold_c, gold_m):
-        return label_document(sid, span_dicts, gold_c, gold_m, features)
-
-    return synthesize_fused(spark, sf_dir, per_doc, GOLD_BLOCKS_PA_SCHEMA,
-                            GOLD_BLOCKS_DDL, amplification, num_partitions)
+    return synthesize_fused(spark, sf_dir, partial(_label_rows,
+                                                   features=features),
+                            GOLD_BLOCKS_PA_SCHEMA, amplification,
+                            num_partitions)
 
 
 def gold_blocks(spans_df, gold_df, features=DEFAULT_FEATURES):
@@ -167,18 +168,7 @@ def gold_blocks(spans_df, gold_df, features=DEFAULT_FEATURES):
     Plan: SortMergeJoin/ShuffledHashJoin on doc_id (AQE-skew-aware)
     followed by one narrow Arrow stage.
     """
-    joined = spans_df.join(gold_df, 'doc_id')
-
-    def gen(batches):
-        from .extract import _spans_rows
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            spans_col = _spans_rows(rb.column('spans'))
-            contents = rb.column('content_text').to_pylist()
-            comments = rb.column('comments_text').to_pylist()
-            rows = []
-            for did, spans, c, m in zip(doc_ids, spans_col, contents, comments):
-                rows.extend(label_document(did, spans or [], c, m, features))
-            yield pa.RecordBatch.from_pylist(rows, GOLD_BLOCKS_PA_SCHEMA)
-
-    return joined.mapInArrow(gen, GOLD_BLOCKS_DDL)
+    return map_rows(spans_df.join(gold_df, 'doc_id'),
+                    partial(_label_rows, features=features),
+                    GOLD_BLOCKS_PA_SCHEMA,
+                    args=('doc_id', 'spans', 'content_text', 'comments_text'))

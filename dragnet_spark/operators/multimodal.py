@@ -1,9 +1,9 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride the pipeline as ``binary`` columns with a typed
-metadata struct; decode / feature-extract run as vectorized Arrow stages
-(``mapInPandas``).  The actual codecs are NOT in this container, so the
-decode step is STUBBED (:func:`decode_media` raises NotImplementedError;
+metadata struct; decode / feature-extract run as Arrow row stages
+(``plans.arrow_stage``).  The actual codecs are NOT in this container, so
+the decode step is STUBBED (:func:`decode_media` raises NotImplementedError;
 :func:`fake_decode` is the deterministic stand-in used by tests) -- the
 Spark-side plumbing (schema, batch shape, partitioning, UDF signatures)
 is real and tested, and a real codec drops into :data:`_DECODERS`.
@@ -12,10 +12,12 @@ is real and tested, and a real codec drops into :data:`_DECODERS`.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
+
+from ..plans.arrow_stage import map_rows
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField('media_ref', T.StringType()),
@@ -69,22 +71,12 @@ def media_table(docs_df, text_col='text'):
 
 
 def extract_media_features(media_df, n_features=16):
-    """Vectorized feature extraction over binary payloads (one Arrow
-    stage; swap fake_decode for a real codec via _DECODERS)."""
-    schema = T.StructType([
-        T.StructField('media_ref', T.StringType()),
-        T.StructField('features', T.ArrayType(T.DoubleType())),
-    ])
-
-    def batches(pdfs):
-        for pdf in pdfs:
-            feats = [fake_decode(p, n_features).tolist()
-                     for p in pdf['payload']]
-            yield pd.DataFrame({'media_ref': pdf['media_ref'],
-                                'features': feats})
-
-    return media_df.select('media_ref', 'payload').mapInPandas(
-        batches, schema)
+    """Feature extraction over binary payloads (one Arrow row stage;
+    swap fake_decode for a real codec via _DECODERS)."""
+    return map_rows(media_df.select('media_ref', 'payload'),
+                    lambda p: ((fake_decode(p, n_features).tolist(),),),
+                    pa.schema([('features', pa.list_(pa.float64()))]),
+                    passthrough=('media_ref',))
 
 
 def media_stats(media_df):

@@ -37,11 +37,10 @@ import pyspark.sql.functions as F
 
 from ..kernels.pdf import (extract_text_runs, layout_blocks, make_pdf,
                            strip_margin_furniture, strip_repeated_furniture)
+from ..plans.arrow_stage import map_rows
 
 _WS_RE = re.compile(r'[ \t\n\r\f\v]+')
 
-PDF_BLOCKS_DDL = ('doc_id string, page int, block_idx int, kind string, '
-                  'size double, y_top double, text string')
 PDF_BLOCKS_PA_SCHEMA = pa.schema([
     ('doc_id', pa.string()),
     ('page', pa.int32()),
@@ -67,54 +66,41 @@ def render_pdf(doc_id, text):
                     footer='retrieved for research use')
 
 
-def pdf_corpus(spark, sf_dir, num_partitions=None):
-    """documents.parquet -> (doc_id, payload binary) PDFs."""
+def _documents(spark, sf_dir, num_partitions):
+    """(doc_id as string, text) rows, spread as in sources/synthesis.py."""
     if num_partitions is None:
         num_partitions = 4 * spark.sparkContext.defaultParallelism
     docs = (spark.read.parquet(f'{sf_dir}/documents.parquet')
             .select(F.col('doc_id').cast('string').alias('doc_id'), 'text'))
     if num_partitions:
         docs = docs.repartition(num_partitions)
-
-    schema = pa.schema([('doc_id', pa.string()), ('payload', pa.binary())])
-
-    def gen(batches):
-        for rb in batches:
-            ids = rb.column('doc_id').to_pylist()
-            texts = rb.column('text').to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()),
-                 pa.array([render_pdf(d, t) for d, t in zip(ids, texts)],
-                          pa.binary())], schema=schema)
-
-    return docs.mapInArrow(gen, 'doc_id string, payload binary')
+    return docs
 
 
-def _doc_blocks(doc_id, payload, dechrome):
+def pdf_corpus(spark, sf_dir, num_partitions=None):
+    """documents.parquet -> (doc_id, payload binary) PDFs."""
+    return map_rows(_documents(spark, sf_dir, num_partitions),
+                    lambda d, t: ((d, render_pdf(d, t)),),
+                    pa.schema([('doc_id', pa.string()),
+                               ('payload', pa.binary())]))
+
+
+def _doc_blocks(payload, dechrome):
     blocks = layout_blocks(extract_text_runs(payload or b''))
     if dechrome:
         blocks = strip_margin_furniture(strip_repeated_furniture(blocks))
-    return [{'doc_id': doc_id, 'page': b['page'],
-             'block_idx': b['block_idx'], 'kind': b['kind'],
-             'size': b['size'], 'y_top': b['y_top'], 'text': b['text']}
-            for b in blocks]
+    return blocks
 
 
 def pdf_layout_blocks(df, dechrome=False, payload_col='payload'):
     """(doc_id, payload) -> exploded ordered layout blocks."""
-    src = df.select('doc_id', F.col(payload_col).alias('_p'))
+    def per_row(doc_id, payload):
+        return [(doc_id, b['page'], b['block_idx'], b['kind'], b['size'],
+                 b['y_top'], b['text'])
+                for b in _doc_blocks(payload, dechrome)]
 
-    def gen(batches):
-        for rb in batches:
-            ids = rb.column('doc_id').to_pylist()
-            payloads = rb.column('_p').to_pylist()
-            rows = []
-            for d, p in zip(ids, payloads):
-                rows.extend(_doc_blocks(d, p, dechrome))
-            yield pa.RecordBatch.from_pylist(rows,
-                                             schema=PDF_BLOCKS_PA_SCHEMA)
-
-    return src.mapInArrow(gen, PDF_BLOCKS_DDL)
+    return map_rows(df.select('doc_id', F.col(payload_col).alias('_p')),
+                    per_row, PDF_BLOCKS_PA_SCHEMA)
 
 
 _CONTENT_SCHEMA = pa.schema([
@@ -123,21 +109,18 @@ _CONTENT_SCHEMA = pa.schema([
     ('n_pages', pa.int32()),
     ('content_text', pa.string()),
 ])
-_CONTENT_DDL = ('doc_id string, title string, n_pages int, '
-                'content_text string')
 
 
 def _content_row(doc_id, payload):
     """One de-chromed content row from a PDF payload (shared by the
     two-stage and fused paths so their outputs are identical by
     construction)."""
-    blocks = _doc_blocks(doc_id, payload, dechrome=True)
+    blocks = _doc_blocks(payload, dechrome=True)
     title = next((b['text'] for b in blocks
                   if b['kind'] == 'heading'), None)
     body = ' '.join(b['text'] for b in blocks if b['kind'] == 'body')
     n_pages = max((b['page'] for b in blocks), default=-1) + 1
-    return {'doc_id': doc_id, 'title': title,
-            'n_pages': n_pages, 'content_text': body}
+    return (doc_id, title, n_pages, body)
 
 
 def pdf_extract_content(df, payload_col='payload'):
@@ -150,17 +133,8 @@ def pdf_extract_content(df, payload_col='payload'):
     shape as the HTML synthesize_and_extract fast path; asserted in
     tests/test_pdf.py).
     """
-    src = df.select('doc_id', F.col(payload_col).alias('_p'))
-
-    def gen(batches):
-        for rb in batches:
-            ids = rb.column('doc_id').to_pylist()
-            payloads = rb.column('_p').to_pylist()
-            yield pa.RecordBatch.from_pylist(
-                [_content_row(d, p) for d, p in zip(ids, payloads)],
-                schema=_CONTENT_SCHEMA)
-
-    return src.mapInArrow(gen, _CONTENT_DDL)
+    return map_rows(df.select('doc_id', F.col(payload_col).alias('_p')),
+                    lambda d, p: (_content_row(d, p),), _CONTENT_SCHEMA)
 
 
 def synthesize_and_extract_pdf(spark, sf_dir, num_partitions=None):
@@ -168,20 +142,6 @@ def synthesize_and_extract_pdf(spark, sf_dir, num_partitions=None):
     as ``pdf_extract_content(pdf_corpus(...))`` -- the Flate-compressed
     payload bytes never cross the Arrow boundary at all (guide §4.1),
     they are parsed right where they are written."""
-    if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
-    docs = (spark.read.parquet(f'{sf_dir}/documents.parquet')
-            .select(F.col('doc_id').cast('string').alias('doc_id'), 'text'))
-    if num_partitions:
-        docs = docs.repartition(num_partitions)
-
-    def gen(batches):
-        for rb in batches:
-            ids = rb.column('doc_id').to_pylist()
-            texts = rb.column('text').to_pylist()
-            yield pa.RecordBatch.from_pylist(
-                [_content_row(d, render_pdf(d, t))
-                 for d, t in zip(ids, texts)],
-                schema=_CONTENT_SCHEMA)
-
-    return docs.mapInArrow(gen, _CONTENT_DDL)
+    return map_rows(_documents(spark, sf_dir, num_partitions),
+                    lambda d, t: (_content_row(d, render_pdf(d, t)),),
+                    _CONTENT_SCHEMA)

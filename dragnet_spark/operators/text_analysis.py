@@ -19,7 +19,13 @@ only partially there, and the python form A/B-measured slower.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
+import pyarrow as pa
 import pyspark.sql.functions as F
+
+from ..plans.arrow_stage import map_rows
 
 TOKEN_PATTERN = '[^a-zA-Z0-9]+'
 _ALNUM_SPACE = ('abcdefghijklmnopqrstuvwxyz'
@@ -608,24 +614,6 @@ def stratified_sample(df, fracs, strata_col='lang', key_col='doc_id'):
 # old expression trees (the same pattern as synthesize_extract_gold_counts,
 # whose python/JVM tokenizer agreement is already test-pinned).
 
-_PY_TOKEN_RE = None
-
-
-def _py_regexes():
-    global _PY_TOKEN_RE
-    if _PY_TOKEN_RE is None:
-        import re
-        _PY_TOKEN_RE = (
-            re.compile(TOKEN_PATTERN),
-            # Java \s is ASCII-only [ \t\n\x0B\f\r]; re.ASCII pins the
-            # python dialect to the same set
-            re.compile(r'\s+', re.ASCII),
-            re.compile('[一-鿿]'),
-            re.compile('[A-Za-z]'),
-        )
-    return _PY_TOKEN_RE
-
-
 def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
                   cjk=False, alnum=False, sigs=False, words=False,
                   keep_cols=()):
@@ -635,8 +623,6 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
     Null text propagates as null counts, so downstream JVM arithmetic
     null-propagates exactly as the old all-JVM expression trees did.
     """
-    import pyarrow as pa
-
     # hits: True = all STOPWORDS languages, or an iterable subset --
     # the per-row python loop then intersects only what the caller
     # consumes
@@ -661,69 +647,48 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
                    ('_n_hash', pa.int64()), ('_ell_lendiff', pa.int64()),
                    ('_alpha_words', pa.int64()), ('_stop_hits', pa.int64())]
 
-    in_fields = ['doc_id', *keep_cols, text_col]
-    src = df.select(*dict.fromkeys(in_fields))  # dedup, keep order
-    ddl_types = {f.name: f.dataType.simpleString() for f in src.schema}
+    src = df.select(*dict.fromkeys(['doc_id', *keep_cols, text_col]))
     pass_cols = ['doc_id', *[c for c in keep_cols if c != 'doc_id']]
-    out_ddl = ', '.join(
-        ['%s %s' % (c, ddl_types[c]) for c in pass_cols]
-        + ['%s %s' % (name, 'string' if typ == pa.string() else 'bigint')
-           for name, typ in fields])
     stop_sets = {lang: frozenset(STOPWORDS[lang]) for lang in hit_langs}
     gopher_stop = frozenset(GOPHER_STOPWORDS)
     alnum_sp_set = frozenset(_ALNUM_SPACE)
+    tok_re = re.compile(TOKEN_PATTERN)
+    # Java \s is ASCII-only [ \t\n\x0B\f\r]; re.ASCII pins the python
+    # dialect to the same set
+    ws_re = re.compile(r'\s+', re.ASCII)
+    cjk_re = re.compile('[一-鿿]')
+    alpha_re = re.compile('[A-Za-z]')
+    null_row = ((None,) * len(fields),)
 
-    def gen(batches):
-        import hashlib
-        tok_re, ws_re, cjk_re, alpha_re = _py_regexes()
-        tok_split = tok_re.split
-        ws_split = ws_re.split
-        for rb in batches:
-            cols = {name: rb.column(i)
-                    for i, name in enumerate(rb.schema.names)}
-            texts = cols[text_col].to_pylist()
-            out = {name: [] for name, _ in fields}
-            for t in texts:
-                if t is None:
-                    for name, _ in fields:
-                        out[name].append(None)
-                    continue
-                out['_n_chars'].append(len(t))
-                if raw:
-                    toks = [x for x in tok_split(t) if x]
-                    out['_n_tokens'].append(len(toks))
-                    out['_n_distinct'].append(len(set(toks)))
-                if lower or hit_langs or sigs:
-                    toksl = [x for x in tok_split(t.lower()) if x]
-                    dt = set(toksl)
-                if lower:
-                    out['_n_tokens_lower'].append(len(toksl))
-                for lang in hit_langs:
-                    out['_h_' + lang].append(len(dt & stop_sets[lang]))
-                if cjk:
-                    out['_n_cjk'].append(len(cjk_re.findall(t)))
-                if alnum:
-                    out['_n_alnum_sp'].append(
-                        sum(1 for ch in t if ch in alnum_sp_set))
-                if sigs:
-                    out['_content_sig'].append(
-                        hashlib.md5(t.encode('utf-8')).hexdigest())
-                    out['_tokenset_sig'].append(hashlib.md5(
-                        ' '.join(sorted(dt)).encode('utf-8')).hexdigest())
-                if words:
-                    ws = [w for w in ws_split(t.strip(' ')) if w]
-                    out['_n_words'].append(len(ws))
-                    out['_sum_word_len'].append(sum(map(len, ws)))
-                    out['_n_hash'].append(t.count('#'))
-                    out['_ell_lendiff'].append(3 * t.count('...'))
-                    out['_alpha_words'].append(
-                        sum(1 for w in ws if alpha_re.search(w)))
-                    out['_stop_hits'].append(
-                        len({w.lower() for w in ws} & gopher_stop))
-            arrays = [cols[c] for c in pass_cols]
-            arrays += [pa.array(out[name], type=typ)
-                       for name, typ in fields]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=pass_cols + [name for name, _ in fields])
+    def per_row(t):
+        if t is None:
+            return null_row
+        vals = [len(t)]
+        if raw:
+            toks = [x for x in tok_re.split(t) if x]
+            vals += (len(toks), len(set(toks)))
+        if lower or hit_langs or sigs:
+            toksl = [x for x in tok_re.split(t.lower()) if x]
+            dt = set(toksl)
+        if lower:
+            vals.append(len(toksl))
+        for lang in hit_langs:
+            vals.append(len(dt & stop_sets[lang]))
+        if cjk:
+            vals.append(len(cjk_re.findall(t)))
+        if alnum:
+            vals.append(sum(1 for ch in t if ch in alnum_sp_set))
+        if sigs:
+            vals += (hashlib.md5(t.encode('utf-8')).hexdigest(),
+                     hashlib.md5(' '.join(sorted(dt)).encode('utf-8'))
+                     .hexdigest())
+        if words:
+            ws = [w for w in ws_re.split(t.strip(' ')) if w]
+            vals += (len(ws), sum(map(len, ws)), t.count('#'),
+                     3 * t.count('...'),
+                     sum(1 for w in ws if alpha_re.search(w)),
+                     len({w.lower() for w in ws} & gopher_stop))
+        return (vals,)
 
-    return src.mapInArrow(gen, out_ddl)
+    return map_rows(src, per_row, pa.schema(fields), passthrough=pass_cols,
+                    args=(text_col,))

@@ -15,7 +15,10 @@ Both parse with JVM-side column expressions (no UDF).
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
+
+from ..plans.arrow_stage import map_rows
 
 # data_processing.py:26 -- regex split, first occurrence only
 COMMENTS_DELIM_RE = r'\n*!@#\$%\^&\*\(\)\s+COMMENTS\n*'
@@ -63,25 +66,11 @@ def cleaneval_text(html: str) -> str:
 def parse_corrected_cleaneval(df, text_col='corrected_text'):
     """CleanEval gold column -> (content_text, comments_text='') via one
     Arrow stage (HTML parsing is not a column expression)."""
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    src = df.select('doc_id', F.col(text_col).alias('_t'))
-    schema = T.StructType([
-        T.StructField('doc_id', df.schema['doc_id'].dataType),
-        T.StructField('content_text', T.StringType()),
-        T.StructField('comments_text', T.StringType()),
-    ])
-
-    def batches(pdfs):
-        for pdf in pdfs:
-            yield pd.DataFrame({
-                'doc_id': pdf['doc_id'],
-                'content_text': [cleaneval_text(t or '') for t in pdf['_t']],
-                'comments_text': ['' for _ in pdf['_t']],
-            })
-
-    return src.mapInPandas(batches, schema)
+    return map_rows(df.select('doc_id', F.col(text_col).alias('_t')),
+                    lambda t: ((cleaneval_text(t or ''), ''),),
+                    pa.schema([('content_text', pa.string()),
+                               ('comments_text', pa.string())]),
+                    passthrough=('doc_id',))
 
 
 def format_corrected(gold_df):

@@ -26,6 +26,8 @@ import re
 
 import pyarrow as pa
 
+from ..plans.arrow_stage import map_rows
+
 SPANS_SCHEMA = pa.schema([
     ('doc_id', pa.string()),
     ('spans', pa.list_(pa.struct([
@@ -288,10 +290,21 @@ EDGE_DOCS = [
 ]
 
 
-def synthesize_batches(doc_batch, amplification=1, chrome_by_host=False):
-    """documents.parquet RecordBatch -> (spans RecordBatch, gold RecordBatch).
+def _render(doc_id, text, **kw):
+    """:func:`make_document` with the spans as the dicts the span
+    column holds: (span dicts, gold content, gold comments)."""
+    spans, gold_c, gold_m = make_document(doc_id, text or '', **kw)
+    return ([{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
+             for k, t, m, o in spans], gold_c, gold_m)
 
-    Pure function of the input rows (executor-safe, order-independent).
+
+def synthetic_docs(did, text, amplification=1, chrome_by_host=False):
+    """Yield ``(doc_id, span_dicts, gold_content, gold_comments)`` for
+    each of the ``amplification`` documents rendered from one
+    documents.parquet row -- the corpus's one id scheme
+    (``h000``/``h%03d`` host + ``doc-%08d-%d``).
+
+    A pure function of the input row (executor-safe, order-independent).
     ``chrome_by_host=True`` is the phase-3 "hard" corpus: each HOST is
     deterministically assigned one of the four chrome template families
     (default/alt/de/zh), so templates cross hosts and ~half the chrome
@@ -299,27 +312,14 @@ def synthesize_batches(doc_batch, amplification=1, chrome_by_host=False):
     boilerplate), but extraction can no longer key on any one template
     and template mining has real cross-host families to find.
     """
-    doc_ids = doc_batch.column('doc_id').to_pylist()
-    texts = doc_batch.column('text').to_pylist()
-    span_rows, gold_rows = [], []
-    for did, text in zip(doc_ids, texts):
-        for rep in range(amplification):
-            h = _h('%s:%d' % (did, rep), 10)
-            host = 'h000' if h < 3 else 'h%03d' % (1 + _h('%s:%d:host' % (did, rep), 97))
-            sid = '%s/doc-%08d-%d' % (host, did, rep)
-            chrome = (TEMPLATE_FAMILIES[_h(host + ':tpl',
-                                           len(TEMPLATE_FAMILIES))]
-                      if chrome_by_host else 'default')
-            spans, gold_c, gold_m = make_document(sid, text or '',
-                                                  chrome=chrome)
-            span_rows.append({'doc_id': sid, 'spans': [
-                {'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                for k, t, m, o in spans]})
-            gold_rows.append({'doc_id': sid, 'content_text': gold_c,
-                              'comments_text': gold_m})
-    spans_rb = pa.RecordBatch.from_pylist(span_rows, schema=SPANS_SCHEMA)
-    gold_rb = pa.RecordBatch.from_pylist(gold_rows, schema=GOLD_SCHEMA)
-    return spans_rb, gold_rb
+    for rep in range(amplification):
+        h = _h('%s:%d' % (did, rep), 10)
+        host = ('h000' if h < 3
+                else 'h%03d' % (1 + _h('%s:%d:host' % (did, rep), 97)))
+        sid = '%s/doc-%08d-%d' % (host, did, rep)
+        chrome = (TEMPLATE_FAMILIES[_h(host + ':tpl', len(TEMPLATE_FAMILIES))]
+                  if chrome_by_host else 'default')
+        yield (sid, *_render(sid, text, chrome=chrome))
 
 
 def edge_doc_rows():
@@ -337,30 +337,35 @@ def edge_docs_dfs(spark):
     """(spans_df, gold_df) for the fixed edge-case docs -- the tiny
     union branch the fused single-stage queries attach so their output
     matches ``synthesize_corpus(include_edge_docs=True)`` pipelines."""
-    import pyspark.sql.types as T
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    spans_type = T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('spans', T.ArrayType(T.StructType([
-            T.StructField('kind', T.StringType()),
-            T.StructField('text', T.StringType()),
-            T.StructField('media_ref', T.StringType()),
-            T.StructField('offset', T.IntegerType()),
-        ]))),
-    ])
-    gold_type = T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('content_text', T.StringType()),
-        T.StructField('comments_text', T.StringType()),
-    ])
     span_rows, gold_rows = edge_doc_rows()
-    return (spark.createDataFrame(span_rows, spans_type),
-            spark.createDataFrame(gold_rows, gold_type))
+    return (spark.createDataFrame(span_rows, from_arrow_schema(SPANS_SCHEMA)),
+            spark.createDataFrame(gold_rows, from_arrow_schema(GOLD_SCHEMA)))
 
 
-def synthesize_fused(spark, sf_dir, per_doc_rows, pa_schema, ddl,
-                     amplification=1, num_partitions=None,
-                     docs_per_flush=1024):
+def _documents(spark, sf_dir, num_partitions):
+    """The (doc_id, text) rows, spread by one round-robin exchange.
+
+    The source parquet is one small file = one input split, but the
+    downstream Arrow stages (synthesis, blockify, featurize) are
+    Python-heavy per row -- parallelism must come from an explicit
+    repartition of the *cheap* doc rows before the fat work, not from
+    file splits.  Catalyst prunes the scan to (doc_id, text)
+    (ReadSchema).  ``num_partitions`` 0 disables the spread (plan
+    inspection); None means 4x the default parallelism.
+    """
+    if num_partitions is None:
+        num_partitions = 4 * spark.sparkContext.defaultParallelism
+    docs = spark.read.parquet(f'{sf_dir}/documents.parquet').select(
+        'doc_id', 'text')
+    if num_partitions:
+        docs = docs.repartition(num_partitions)
+    return docs
+
+
+def synthesize_fused(spark, sf_dir, per_doc_rows, out_schema,
+                     amplification=1, num_partitions=None):
     """Synthesis + an arbitrary per-document kernel in ONE python stage.
 
     The two-stage form (``synthesize_corpus`` -> join/mapInArrow) pays
@@ -370,52 +375,19 @@ def synthesize_fused(spark, sf_dir, per_doc_rows, pa_schema, ddl,
     a doc_id shuffle join of two opaque python outputs (guide §4.1: you
     control how many columns/rows cross the boundary).  Here
     ``per_doc_rows(sid, span_dicts, gold_content, gold_comments)`` runs
-    right where the document is synthesized -- same id scheme and
-    rendering as :func:`synthesize_batches` -- so spans and gold never
-    cross the boundary at all, only the kernel's output rows.
+    right where the document is synthesized (:func:`synthetic_docs`) and
+    returns that document's output tuples (``out_schema``), so spans and
+    gold never cross the boundary at all, only the kernel's output rows.
 
-    Output batches are flushed every ``docs_per_flush`` documents to
-    bound per-batch memory.  Covers the parquet corpus only; callers
-    wanting edge-doc parity union the tiny :func:`edge_docs_dfs` branch.
+    Covers the parquet corpus only; callers wanting edge-doc parity
+    union the tiny :func:`edge_docs_dfs` branch.
     """
-    if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet').select(
-        'doc_id', 'text')
-    if num_partitions:
-        docs = docs.repartition(num_partitions)
+    def per_row(did, text):
+        for doc in synthetic_docs(did, text, amplification):
+            yield from per_doc_rows(*doc)
 
-    def gen(batches):
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            texts = rb.column('text').to_pylist()
-            rows = []
-            n_done = 0
-            for did, text in zip(doc_ids, texts):
-                for rep in range(amplification):
-                    h = _h('%s:%d' % (did, rep), 10)
-                    host = ('h000' if h < 3 else 'h%03d'
-                            % (1 + _h('%s:%d:host' % (did, rep), 97)))
-                    sid = '%s/doc-%08d-%d' % (host, did, rep)
-                    spans, gold_c, gold_m = make_document(sid, text or '')
-                    span_dicts = [
-                        {'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                        for k, t, m, o in spans]
-                    rows.extend(per_doc_rows(sid, span_dicts,
-                                             gold_c, gold_m))
-                    n_done += 1
-                    if n_done >= docs_per_flush:
-                        yield pa.RecordBatch.from_pylist(rows,
-                                                         schema=pa_schema)
-                        rows, n_done = [], 0
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=pa_schema)
-
-    return docs.mapInArrow(gen, ddl)
-
-
-EXTRACT_GOLD_DDL = ('doc_id string, content_text string, '
-                    'content_text_gold string')
+    return map_rows(_documents(spark, sf_dir, num_partitions), per_row,
+                    out_schema)
 
 
 def synthesize_extract_gold(spark, sf_dir, amplification=1, model=None,
@@ -425,7 +397,7 @@ def synthesize_extract_gold(spark, sf_dir, amplification=1, model=None,
     evaluation shape with no second synthesis pass and no doc_id join
     of fat text (both sides are born in the same kernel call)."""
     from ..model import default_model
-    from ..operators.extract import process_document
+    from ..operators.extract import extract_document
 
     model = model or default_model()
     schema = pa.schema([('doc_id', pa.string()),
@@ -433,15 +405,9 @@ def synthesize_extract_gold(spark, sf_dir, amplification=1, model=None,
                         ('content_text_gold', pa.string())])
 
     def per_doc(sid, span_dicts, gold_c, gold_m):
-        try:
-            _, content, _ = process_document(span_dicts, model)
-        except Exception:
-            content = ''
-        return [{'doc_id': sid, 'content_text': content,
-                 'content_text_gold': gold_c}]
+        return [(sid, extract_document(span_dicts, model)[1], gold_c)]
 
-    return synthesize_fused(spark, sf_dir, per_doc, schema,
-                            EXTRACT_GOLD_DDL, amplification,
+    return synthesize_fused(spark, sf_dir, per_doc, schema, amplification,
                             num_partitions)
 
 
@@ -454,12 +420,12 @@ def synthesize_extract_gold_counts(spark, sf_dir, amplification=1,
     JVM twin re-tokenized both 2 KB texts per doc with regex split +
     array_distinct + array_intersect (~4.3 s of a 9.6 s query at 50 k
     docs); the tokenizer here is the same ASCII class
-    (``metrics.TOKEN_PATTERN``), on which Java and Python regex agree
-    codepoint-for-codepoint, and the emitted counts are exact ints, so
-    the downstream ratio arithmetic is bit-identical."""
+    (``text_analysis.TOKEN_PATTERN``), on which Java and Python regex
+    agree codepoint-for-codepoint, and the emitted counts are exact
+    ints, so the downstream ratio arithmetic is bit-identical."""
     from ..model import default_model
-    from ..operators.extract import process_document
-    from ..operators.metrics import TOKEN_PATTERN
+    from ..operators.extract import extract_document
+    from ..operators.text_analysis import TOKEN_PATTERN
 
     model = model or default_model()
     tok_re = re.compile(TOKEN_PATTERN)
@@ -467,75 +433,41 @@ def synthesize_extract_gold_counts(spark, sf_dir, amplification=1,
                         ('_np', pa.int32()), ('_na', pa.int32())])
 
     def per_doc(sid, span_dicts, gold_c, gold_m):
-        try:
-            _, content, _ = process_document(span_dicts, model)
-        except Exception:
-            content = ''
+        content = extract_document(span_dicts, model)[1]
         p = set(tok_re.split(content))
         p.discard('')
         a = set(tok_re.split(gold_c))
         a.discard('')
-        return [{'doc_id': sid, '_tp': len(p & a), '_np': len(p),
-                 '_na': len(a)}]
+        return [(sid, len(p & a), len(p), len(a))]
 
-    return synthesize_fused(spark, sf_dir, per_doc, schema,
-                            'doc_id string, _tp int, _np int, _na int',
-                            amplification, num_partitions)
+    return synthesize_fused(spark, sf_dir, per_doc, schema, amplification,
+                            num_partitions)
 
 
 def synthesize_corpus(spark, sf_dir, amplification=1, include_edge_docs=True,
                       num_partitions=None, chrome_by_host=False):
     """Distributed corpus synthesis: returns (spans_df, gold_df).
 
-    The source parquet is one small file = one input split, but the
-    downstream Arrow stages (synthesis, blockify, featurize) are
-    Python-heavy per row -- parallelism must come from an explicit
-    repartition of the *cheap* doc rows before the fat work, not from
-    file splits.  One tiny round-robin exchange of (doc_id, text) rows,
-    then everything stays narrow.  Catalyst prunes the scan to
-    (doc_id, text) (ReadSchema).
+    One tiny round-robin exchange of (doc_id, text) rows
+    (:func:`_documents`), then everything stays narrow.
     """
-    import pyspark.sql.types as T
+    docs = _documents(spark, sf_dir, num_partitions)
 
-    if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet').select(
-        'doc_id', 'text')
-    if num_partitions:  # 0/None disables the spread (plan inspection)
-        docs = docs.repartition(num_partitions)
+    def gen_spans(did, text):
+        return [(sid, spans) for sid, spans, _, _ in
+                synthetic_docs(did, text, amplification, chrome_by_host)]
 
-    spans_type = T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('spans', T.ArrayType(T.StructType([
-            T.StructField('kind', T.StringType()),
-            T.StructField('text', T.StringType()),
-            T.StructField('media_ref', T.StringType()),
-            T.StructField('offset', T.IntegerType()),
-        ]))),
-    ])
-    gold_type = T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('content_text', T.StringType()),
-        T.StructField('comments_text', T.StringType()),
-    ])
+    def gen_gold(did, text):
+        return [(sid, gold_c, gold_m) for sid, _, gold_c, gold_m in
+                synthetic_docs(did, text, amplification, chrome_by_host)]
 
-    def gen_spans(batches):
-        for rb in batches:
-            out, _ = synthesize_batches(rb, amplification, chrome_by_host)
-            yield out
-
-    def gen_gold(batches):
-        for rb in batches:
-            _, out = synthesize_batches(rb, amplification, chrome_by_host)
-            yield out
-
-    spans_df = docs.mapInArrow(gen_spans, schema=spans_type)
-    gold_df = docs.mapInArrow(gen_gold, schema=gold_type)
+    spans_df = map_rows(docs, gen_spans, SPANS_SCHEMA)
+    gold_df = map_rows(docs, gen_gold, GOLD_SCHEMA)
 
     if include_edge_docs:
-        span_rows, gold_rows = edge_doc_rows()
-        spans_df = spans_df.unionByName(spark.createDataFrame(span_rows, spans_type))
-        gold_df = gold_df.unionByName(spark.createDataFrame(gold_rows, gold_type))
+        edge_spans, edge_gold = edge_docs_dfs(spark)
+        spans_df = spans_df.unionByName(edge_spans)
+        gold_df = gold_df.unionByName(edge_gold)
     return spans_df, gold_df
 
 
@@ -560,62 +492,23 @@ def synthesize_with_mirrors(spark, sf_dir, mod=8, num_partitions=None):
 
     Returns (spans_df, n_expected_mirror_pairs_is_data_dependent).
     """
-    import pyspark.sql.types as T
+    def per_row(did, text):
+        for sid, spans, _, _ in synthetic_docs(did, text):
+            yield sid, spans
+            if _h(sid + ':mirror', mod) == 0:
+                mid = 'mirror/' + sid
+                yield mid, _render(mid, text, chrome='alt', layout_key=sid)[0]
 
-    if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet').select(
-        'doc_id', 'text')
-    if num_partitions:
-        docs = docs.repartition(num_partitions)
-
-    spans_type = T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('spans', T.ArrayType(T.StructType([
-            T.StructField('kind', T.StringType()),
-            T.StructField('text', T.StringType()),
-            T.StructField('media_ref', T.StringType()),
-            T.StructField('offset', T.IntegerType()),
-        ]))),
-    ])
-
-    def gen(batches):
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            texts = rb.column('text').to_pylist()
-            rows = []
-            for did, text in zip(doc_ids, texts):
-                h = _h('%s:0' % did, 10)
-                host = ('h000' if h < 3
-                        else 'h%03d' % (1 + _h('%s:0:host' % did, 97)))
-                sid = '%s/doc-%08d-0' % (host, did)
-                variants = [(sid, 'default', sid)]
-                if _h(sid + ':mirror', mod) == 0:
-                    variants.append(('mirror/' + sid, 'alt', sid))
-                for out_id, chrome, lk in variants:
-                    spans, _, _ = make_document(out_id, text or '',
-                                                chrome=chrome, layout_key=lk)
-                    rows.append({'doc_id': out_id, 'spans': [
-                        {'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                        for k, t, m, o in spans]})
-            yield pa.RecordBatch.from_pylist(rows, schema=SPANS_SCHEMA)
-
-    return docs.mapInArrow(gen, schema=spans_type)
+    return map_rows(_documents(spark, sf_dir, num_partitions), per_row,
+                    SPANS_SCHEMA)
 
 
 def iter_span_docs(doc_ids, texts, amplification=1):
-    """Yield (doc_id, span_dicts) per synthesized document -- the same id
-    scheme and rendering as :func:`synthesize_batches`, without the
-    intermediate Arrow materialization."""
+    """Yield (doc_id, span_dicts) per synthesized document -- the
+    :func:`synthetic_docs` stream without the gold texts."""
     for did, text in zip(doc_ids, texts):
-        for rep in range(amplification):
-            h = _h('%s:%d' % (did, rep), 10)
-            host = ('h000' if h < 3
-                    else 'h%03d' % (1 + _h('%s:%d:host' % (did, rep), 97)))
-            sid = '%s/doc-%08d-%d' % (host, did, rep)
-            spans, _, _ = make_document(sid, text or '')
-            yield sid, [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                        for k, t, m, o in spans]
+        for sid, spans, _, _ in synthetic_docs(did, text, amplification):
+            yield sid, spans
 
 
 def synthesize_and_extract(spark, sf_dir, amplification=1, model=None,
@@ -629,41 +522,12 @@ def synthesize_and_extract(spark, sf_dir, amplification=1, model=None,
     extract(synthesize_corpus(...)[0]) for the no-edge-docs corpus
     (asserted in tests)."""
     from ..model import default_model
-    from ..operators.extract import (EXTRACTED_DDL, EXTRACTED_PA_SCHEMA,
-                                     OUT_BATCH_BYTES, STATUS_ERROR,
-                                     process_document)
+    from ..operators.extract import EXTRACTED_PA_SCHEMA, extract_document
 
     model = model or default_model()
-    if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet').select(
-        'doc_id', 'text')
-    if num_partitions:
-        docs = docs.repartition(num_partitions)
 
-    def gen(batches):
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            texts = rb.column('text').to_pylist()
-            rows = []
-            approx_bytes = 0
-            for sid, span_dicts in iter_span_docs(doc_ids, texts,
-                                                  amplification):
-                try:
-                    out_spans, content, status = process_document(
-                        span_dicts, model)
-                except Exception:
-                    out_spans, content, status = [], '', STATUS_ERROR
-                rows.append({'doc_id': sid, 'spans': out_spans,
-                             'content_text': content, 'status': status})
-                approx_bytes += 2 * len(content) + 64
-                if approx_bytes >= OUT_BATCH_BYTES:
-                    yield pa.RecordBatch.from_pylist(
-                        rows, schema=EXTRACTED_PA_SCHEMA)
-                    rows = []
-                    approx_bytes = 0
-            if rows:
-                yield pa.RecordBatch.from_pylist(
-                    rows, schema=EXTRACTED_PA_SCHEMA)
+    def per_doc(sid, span_dicts, gold_c, gold_m):
+        return [(sid, *extract_document(span_dicts, model))]
 
-    return docs.mapInArrow(gen, EXTRACTED_DDL)
+    return synthesize_fused(spark, sf_dir, per_doc, EXTRACTED_PA_SCHEMA,
+                            amplification, num_partitions)

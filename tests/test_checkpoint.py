@@ -188,6 +188,29 @@ class TestPartitioning:
         assert n + o == small_corpus.count()
         assert 0 < o <= int(0.15 * (n + o)) + 1
 
+    def test_spread_guard_leaves_hive_layout_alone(self, spark, tmp_path):
+        # a hive layout has no top-level part files to probe: the guard
+        # must not read that as "0 row groups" and add a shuffle
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from dragnet_spark.plans.partitioning import (probe_parquet_layout,
+                                                      spread_small_scan)
+        base = tmp_path / 'hive'
+        for part in ('a', 'b'):
+            (base / ('part=%s' % part)).mkdir(parents=True)
+            pq.write_table(pa.table({'doc_id': [1, 2], 'text': ['x', 'y']}),
+                           str(base / ('part=%s' % part) / 'x.parquet'))
+        (tmp_path / 'empty').mkdir()
+        assert probe_parquet_layout(str(base)) is None
+        assert probe_parquet_layout(str(tmp_path / 'empty')) is None
+
+        df = spark.read.parquet(str(base))
+        out = spread_small_scan(spark, df, str(base))
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert 'Exchange' not in plan, plan
+        assert out.count() == 4
+
 
 @pytest.mark.spark
 class TestLegacyLayoutMigration:

@@ -156,15 +156,11 @@ class TestSimilarity:
         assert out[0].neighbor_id == 1  # the planted near-duplicate
 
     def test_quantized_topk_finds_planted_neighbor(self, spark, emb):
-        from dragnet_spark.operators.similarity import (lsh_topk,
-                                                        quantized_topk)
+        from dragnet_spark.operators.similarity import quantized_topk
         q = emb.where('vec_id = 0')
         out = quantized_topk(emb, q, k=3, rerank_frac=0.25).collect()
         assert [r.rank for r in out] == [1, 2, 3]
         assert out[0].neighbor_id == 1
-        # compat alias routes to the quantized path
-        alias = lsh_topk(emb, q, k=3).collect()
-        assert alias[0].neighbor_id == 1
 
     def test_quantized_topk_matches_bruteforce(self, spark, emb):
         # at rerank_frac=1.0 the quantized prefilter keeps everything:

@@ -21,6 +21,11 @@ import os
 import pytest
 
 REF_GLOB = '/root/reference/test/datafiles/**/*.html'
+REF_DIR = REF_GLOB.split('/**')[0]
+
+if not os.path.isdir(REF_DIR):
+    pytest.skip('reference fixtures not present: %s' % REF_DIR,
+                allow_module_level=True)
 
 # snapshot pin: (relative path -> block count with default flags)
 EXPECTED_BLOCKS = {
