@@ -28,12 +28,24 @@ Per round: 3 shuffles over O(|V| + |E|) rows of two thin columns.  Each
 round ends in ``localCheckpoint`` to truncate lineage (on a real
 cluster with a checkpoint dir configured, ``checkpoint`` gives the same
 plan truncation plus fault tolerance); no node- or edge-level data ever
-reaches the driver.
+reaches the driver.  Superseded checkpoints are dropped with
+:func:`release_checkpoint` as soon as the next one is written.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+
+
+def release_checkpoint(df):
+    """Drop the blocks behind a ``localCheckpoint`` frame.
+
+    ``DataFrame.unpersist()`` is a no-op on one: the checkpointed RDD is
+    not registered with the cache manager, so its blocks would stay
+    pinned until the JVM garbage-collects the frame.  This unpersists
+    the RDD under the frame's ``LogicalRDD`` leaf instead.
+    """
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def propagate_min_labels(nodes, edges, id_col='doc_id',
@@ -81,7 +93,7 @@ def propagate_min_labels(nodes, edges, id_col='doc_id',
                  .join(labels, '_id')
                  .where(F.col('_new') != F.col('label')))
         done = moved.isEmpty()
-        labels.unpersist()
+        release_checkpoint(labels)
         labels = new_labels
         if done:
             converged = True
@@ -89,5 +101,5 @@ def propagate_min_labels(nodes, edges, id_col='doc_id',
     # the edge list is only consumed during the rounds; the returned
     # labels are independently checkpointed -- release it now rather
     # than pinning a 2x-edge RDD in block storage per call
-    sym.unpersist()
+    release_checkpoint(sym)
     return labels.select(F.col('_id').alias(id_col), 'label'), converged

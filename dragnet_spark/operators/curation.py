@@ -11,7 +11,9 @@ Every stage is the library operator (individually oracle- or
 golden-checked); this module only wires them, so the composition
 inherits each stage's scale shape: the gates are narrow projections /
 doc-keyed aggregations, dedup is the chain-capped LSH + distributed
-connected components path, and nothing touches the driver.
+connected components path, and nothing touches the driver.  Each
+per-document Python stage runs once per pass: the gate table and the
+shingle table are materialized where the flow branches.
 
 ``__spark_entry__.training_corpus_funnel`` is the driver-checked
 funnel view of this composition.
@@ -21,6 +23,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from .components import release_checkpoint
 from .dedup import duplicate_cluster_assignments
 from .text_analysis import (GOPHER_MAX_DUP10GRAM_FRAC,
                             GOPHER_MAX_TOP2GRAM_FRAC,
@@ -80,6 +83,15 @@ def curate_corpus(docs, text_col='text', id_col='doc_id',
     Thresholds are parameters because corpus statistics move them (the
     synthetic corpus needs a scaled ``max_dup10``; see the funnel
     query's note).
+
+    Materialization: the gate table ``(doc_id, text, passes_quality,
+    passes_repetition)`` is written once with ``localCheckpoint(eager=
+    True)``, because the survivors and the verdicts both read it; the
+    thin ``verdicts_df`` is checkpointed the same way, so writing it and
+    deriving ``curated_df`` re-run no gate and no shingle stage.  The
+    text-bearing gate table is released before returning; the
+    verdicts checkpoint (and the component labels it was built from)
+    live as long as the returned frames.
     """
     base = docs.select(F.col(id_col).alias('doc_id'),
                        F.col(text_col).alias('text'))
@@ -92,19 +104,23 @@ def curate_corpus(docs, text_col='text', id_col='doc_id',
     repetition = (gopher_repetition_flags_rowwise(
                       base, max_top2=max_top2, max_dup10=max_dup10)
                   .select('doc_id', 'passes_repetition'))
-    gated = quality.join(repetition, 'doc_id')
-    survivors = (gated
-                 .where((F.col('passes_quality') == 1)
-                        & (F.col('passes_repetition') == 1))
-                 .select('doc_id', 'text'))
-    assigned = duplicate_cluster_assignments(survivors,
-                                             threshold=dedup_threshold)
-    verdicts = (gated.select('doc_id', 'passes_quality',
-                             'passes_repetition')
-                .join(assigned, 'doc_id', 'left')
-                .withColumn('kept',
-                            (F.coalesce('is_canonical', F.lit(0)) == 1)
-                            .cast('long')))
+    gated = quality.join(repetition, 'doc_id').localCheckpoint(eager=True)
+    try:
+        survivors = (gated
+                     .where((F.col('passes_quality') == 1)
+                            & (F.col('passes_repetition') == 1))
+                     .select('doc_id', 'text'))
+        assigned = duplicate_cluster_assignments(survivors,
+                                                 threshold=dedup_threshold)
+        verdicts = (gated.select('doc_id', 'passes_quality',
+                                 'passes_repetition')
+                    .join(assigned, 'doc_id', 'left')
+                    .withColumn('kept',
+                                (F.coalesce('is_canonical', F.lit(0)) == 1)
+                                .cast('long'))
+                    .localCheckpoint(eager=True))
+    finally:
+        release_checkpoint(gated)
     kept_ids = (verdicts.where(F.col('kept') == 1)
                 .select(F.col('doc_id').alias(id_col)))
     curated = docs.join(kept_ids, id_col, 'left_semi')

@@ -211,34 +211,24 @@ def _py_shingles(toks):
     return list(dict.fromkeys(it))
 
 
-def _shingle_stage(df, text_col, exploded):
-    """Tokenize + shingle in ONE Arrow python stage (r06 2nd pass: the
+def shingle_df(df, text_col='text'):
+    """(doc_id, shingles): the distinct shingles of each document, one
+    row per input row, from ONE Arrow python stage (r06 2nd pass: the
     JVM regex engine on the measurement hardware is ~30x slower than
     CPython's and thread-ceilinged per JVM -- text_analysis._counts_stage
-    note).  ``exploded=True`` yields (doc_id, sh) rows (the signature
-    shape), ``False`` yields (doc_id, shingles array) (the verify
-    shape).  Shingle STRINGS are identical to the zip_with/concat_ws
-    form, so every xxhash64 lane, LSH bucket and verified pair
-    downstream is value-identical."""
+    note).  The one shingle table the MinHash path reads: signatures
+    explode it, verification intersects it.  Shingle STRINGS are
+    identical to the zip_with/concat_ws form, so every xxhash64 lane,
+    LSH bucket and verified pair downstream is value-identical."""
     tok_re = re.compile(TOKEN_PATTERN)
     src = df.select(F.col('doc_id'), F.col(text_col).alias('_text'))
 
     def shingles(t):
         return _py_shingles([x for x in tok_re.split((t or '').lower()) if x])
 
-    if exploded:
-        return map_rows(src, lambda t: ((s,) for s in shingles(t)),
-                        pa.schema([('sh', pa.string())]),
-                        passthrough=('doc_id',))
     return map_rows(src, lambda t: ((shingles(t),),),
                     pa.schema([('shingles', pa.list_(pa.string()))]),
                     passthrough=('doc_id',))
-
-
-def shingle_df(df, text_col='text'):
-    """(doc_id, shingles): the verify-side shingle arrays (Arrow python
-    stage -- see ``_shingle_stage``)."""
-    return _shingle_stage(df, text_col, exploded=False)
 
 
 def minhash_signatures(df, text_col='text', k=MINHASH_K):
@@ -250,15 +240,18 @@ def minhash_signatures(df, text_col='text', k=MINHASH_K):
     doc per input partition.  (The nested array_min(transform(...))xK
     formulation generates pathological whole-stage code.)
 
-    r06 (2nd pass): the exploded (doc_id, sh) rows come from the Arrow
-    shingle stage (``_shingle_stage`` -- identical shingle strings, off
-    the ceilinged JVM regex engine; the python stage also closes the
-    earlier ``InferFiltersFromGenerate`` re-tokenization hole for good,
-    since no expression exists to push into the scan).  The k xxhash64
-    lanes and the min-aggregation stay in the JVM, so every signature
-    VALUE is unchanged.
+    The shingles come from the Arrow shingle stage (:func:`shingle_df`
+    -- identical shingle strings, off the ceilinged JVM regex engine; the
+    python stage also closes the earlier ``InferFiltersFromGenerate``
+    re-tokenization hole for good, since no expression exists to push
+    into the scan).  The k xxhash64 lanes and the min-aggregation stay
+    in the JVM, so every signature VALUE is unchanged.
     """
-    sh = _shingle_stage(df, text_col, exploded=True)
+    return _signatures_from_shingles(shingle_df(df, text_col), k)
+
+
+def _signatures_from_shingles(shingles, k=MINHASH_K):
+    sh = shingles.select('doc_id', F.explode('shingles').alias('sh'))
     hashed = sh.select(
         'doc_id', *[F.xxhash64('sh', F.lit(i)).alias('h%d' % i)
                     for i in range(k)])
@@ -368,9 +361,14 @@ def minhash_candidates(df, text_col='text', k=MINHASH_K, bands=LSH_BANDS,
     ``capped`` (no silent caps); callers that need the full family expand
     it transitively downstream.
     """
+    return _candidates_from_shingles(shingle_df(df, text_col), k, bands,
+                                     bucket_cap)
+
+
+def _candidates_from_shingles(shingles, k=MINHASH_K, bands=LSH_BANDS,
+                              bucket_cap=BUCKET_CAP):
     from .similarity import bucket_candidate_pairs
-    sigs = minhash_signatures(df, text_col, k)
-    banded = band_key_rows(sigs, k, bands)
+    banded = band_key_rows(_signatures_from_shingles(shingles, k), k, bands)
     return bucket_candidate_pairs(banded, 'doc_id', 'doc_a', 'doc_b',
                                   bucket_cap, assume_distinct=True)
 
@@ -389,16 +387,22 @@ def minhash_near_duplicates(df, text_col='text', threshold=0.8,
     bands/rows split is the knob that moves the LSH S-curve to the
     target threshold (classic MMDS ch.3 tuning).
     """
-    toks = shingle_df(df, text_col).select(
-        'doc_id', F.col('shingles').alias('t'))
-    cand = minhash_candidates(df, text_col, k=k, bands=bands)
+    return _near_duplicates_from_shingles(shingle_df(df, text_col),
+                                          threshold, k, bands)
+
+
+def _near_duplicates_from_shingles(shingles, threshold=0.8, k=MINHASH_K,
+                                   bands=LSH_BANDS):
+    toks = shingles.select('doc_id', F.col('shingles').alias('t'))
+    cand = _candidates_from_shingles(shingles, k, bands)
     # r06: both sides attach from the SAME un-renamed subtree (aliases
     # above the joins, not per-side selects inside the join children),
     # making the two broadcast subtrees structurally identical --
     # measured NEUTRAL on this Spark build (4.1.2 plans two independent
     # BroadcastQueryStages even for a minimal identical self-join, so
-    # the shingle table is still built twice); kept because it is the
-    # exchange-reuse-eligible shape and no worse.  A melt/regroup
+    # a lazy shingle table is still built twice -- the materialized one
+    # in duplicate_cluster_assignments is only read twice); kept because
+    # it is the exchange-reuse-eligible shape and no worse.  A melt/regroup
     # single-join alternative was measured and rejected for the
     # embedding twin (similarity.py note); same trade here.
     ta, tb = toks.alias('_sta'), toks.alias('_stb')
@@ -566,11 +570,25 @@ def duplicate_cluster_assignments(df, text_col='text', id_col='doc_id',
     volume is linear (chain caps) and the components step is O(log
     diameter) joins -- no doc-level data on the driver at any point,
     the full pipeline a 10^12-doc dedup pass runs.
+
+    The shingle table (:func:`shingle_df`, one row per input doc) is
+    materialized once with ``localCheckpoint(eager=True)``: the LSH
+    signatures, both sides of the Jaccard verify and the components
+    node set all read it, so the Arrow shingle stage runs once per call.
+    It is released when the components step returns -- the labels the
+    result reads are checkpointed on their own.
     """
-    pairs = minhash_near_duplicates(df, text_col=text_col,
-                                    threshold=threshold)
-    return cluster_assignments_from_pairs(df, pairs, id_col=id_col,
-                                          max_rounds=max_rounds)
+    from .components import release_checkpoint
+    shingles = (shingle_df(df.select(F.col(id_col).alias('doc_id'),
+                                     text_col), text_col)
+                .localCheckpoint(eager=True))
+    try:
+        pairs = _near_duplicates_from_shingles(shingles, threshold)
+        out = cluster_assignments_from_pairs(shingles, pairs,
+                                             max_rounds=max_rounds)
+    finally:
+        release_checkpoint(shingles)
+    return out.withColumnRenamed('doc_id', id_col)
 
 
 def cluster_assignments_from_pairs(df, pairs, id_col='doc_id',

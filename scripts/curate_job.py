@@ -17,11 +17,18 @@ writes::
     <output_base>/verdicts/   one row per input doc: the full
                               drop-reason audit trail
 
-then prints the one-line funnel summary.  Thresholds are CLI
-parameters because corpus statistics move them (see the funnel
+then prints the funnel summary as one JSON line::
+
+    {"in": 507, "gates_pass": 377, "kept": 362, "converged": true}
+
+and exits non-zero when ``converged`` is false: the near-dup cluster
+labels did not settle within the components round bound, so the
+``cluster_id``/``kept`` verdicts are not to be trusted.  Thresholds are
+CLI parameters because corpus statistics move them (see the funnel
 query's note on synthetic-vocabulary dup-10-gram rates).
 """
 
+import json
 import sys
 
 from pyspark.sql import SparkSession
@@ -47,11 +54,16 @@ def main(inp, out_base, dedup_threshold='0.9', max_dup10='0.10',
         F.sum(((F.col('passes_quality') == 1)
                & (F.col('passes_repetition') == 1)).cast('long'))
         .alias('n_gates'),
-        F.sum('kept').alias('n_kept')).collect()[0]
-    print('CURATED in=%d gates_pass=%d kept=%d'
-          % (agg['n_in'], agg['n_gates'], agg['n_kept']))
+        F.sum('kept').alias('n_kept'),
+        # gate-dropped docs carry a null flag: they never reached dedup
+        F.sum((F.col('converged') == F.lit(False)).cast('long'))
+        .alias('n_unconverged')).collect()[0]
+    converged = not agg['n_unconverged']
+    print(json.dumps({'in': agg['n_in'], 'gates_pass': agg['n_gates'] or 0,
+                      'kept': agg['n_kept'] or 0, 'converged': converged}))
     spark.stop()
+    return 0 if converged else 1
 
 
 if __name__ == '__main__':
-    main(*sys.argv[1:])
+    sys.exit(main(*sys.argv[1:]))
