@@ -1,30 +1,46 @@
 """Longest-common-subsequence labeling kernel.
 
-Re-derivation of ``/root/reference/dragnet/lcs.pyx`` using a vectorized
-NumPy row recurrence instead of the Cython double loop:
+Re-derivation of the reference ``dragnet/lcs.pyx`` using bit-vector
+rows (Allison & Dix, IPL 23(6), 1986; Hyyro, *Bit-Parallel LCS-length
+Computation Revisited*, AWOCA 2004) over Python ints instead of the
+Cython double loop.
 
-``C[i, j] = max(C[i-1, j], C[i, j-1], C[i-1, j-1] + (X[i-1]==Y[j-1]))``
+Row ``i`` of the LCS matrix ``C`` is one ``n``-bit int ``V_i`` whose bit
+``j-1`` is set iff ``C[i][j] == C[i][j-1]`` (no step at column ``j``),
+so ``C[i][j] = j - popcount(V_i & (2**j - 1))``.  With one mask
+``M[a]`` per symbol of ``y`` (bit ``j`` set iff ``y[j] == a``),
+``V_0 = 2**n - 1`` and
 
-Rows are non-decreasing in ``j``, so the in-row dependency resolves with a
-single ``np.maximum.accumulate`` -- O(m) vectorized row updates.  The
-backtrack in :func:`check_inclusion` replicates the reference's exact
-tie-breaking (``lcs.pyx:88-103``: prefer moving ``j`` when
-``C[i][j-1] >= C[i-1][j]``) so the chosen LCS -- and therefore the derived
-block labels -- are bit-identical.
+``U = V_{i-1} & M[x_i];  V_i = ((V_{i-1} + U) | (V_{i-1} - U)) & (2**n - 1)``
+
+-- a handful of word-parallel big-int ops per document token.
+
+The backtrack in :func:`check_inclusion` replicates the reference's
+exact tie-breaking (``lcs.pyx:88-103``: prefer moving ``j`` when
+``C[i][j-1] >= C[i-1][j]``) so the chosen LCS -- and therefore the
+derived block labels -- are bit-identical.  Off a match the reference
+cell satisfies ``C[i][j] = max(C[i-1][j], C[i][j-1])``, so that test is
+``C[i][j-1] == C[i][j]``, i.e. bit ``j-1`` of ``V_i`` is set: in row
+``i`` the reference walks left across set bits until a match or a clear
+bit.  Skipping a match on a set bit does not change the flags: the
+first column ``q`` of that run of equal values (the highest clear bit
+below it) is then a match as well -- were it not, ``C[i-1][q+1]`` would
+exceed ``C[i-1]`` further right -- so ``x[i-1]`` is matched either way,
+and row ``i-1`` is entered at a column of the same value, from which
+the same argument repeats.  So each row costs one big-int
+``bit_length`` (the highest clear bit below ``j``), never a per-cell
+step; ``tests/test_lcs.py`` pins the flags against a naive DP with the
+reference backtrack.
 
 Memory/time bounds (SURVEY.md §4).  The reference materializes the full
 ``(m+1, n+1)`` uint16 matrix and *asserts* below 65k tokens
 (``lcs.pyx:30-33``); one huge web document must not kill an executor, so:
 
-* ``m*n <= MAX_TOKENS**2`` (67M cells, <=134 MB): full-matrix backtrack,
-  bit-identical to the reference.  This covers every document either side
-  of which fits the reference's own practical range.
-* ``m*n <= CELL_BUDGET`` (537M cells): Hirschberg divide-and-conquer in
-  O(m+n) space -- a 65k-token document against an 8k-token gold labels
-  *fully* with a few MB of live memory.  LCS length (hence labels) is
-  exact; in rare ambiguous-tie cases the chosen member set can differ
-  from the reference's backtrack (the reference asserts out above 65k
-  tokens, so there is no parity target in this regime).
+* ``m*n <= CELL_BUDGET`` (537M cells): the exact reference backtrack.
+  The kept rows take ``(m+1)*n/8`` bytes and the masks, built only for
+  symbols present in both sides, at most ``m*n/8``: rows + masks <=
+  ``2*CELL_BUDGET/8`` (~134 MB) at the budget; the masks are dropped
+  before the backtrack.
 * beyond ``CELL_BUDGET``: O(m*n) *time* is the real bound (a 500k x 500k
   pair is ~2.5e11 cell ops regardless of space), so work is capped.
   Tokens past the document cap are *unknown*, never unmatched.  Long
@@ -53,9 +69,6 @@ MAX_TOKENS = 8192
 # Hard per-(doc, gold) DP budget: ~537M cells keeps worst-case labeling
 # of one pathological document to single-digit seconds on one core.
 CELL_BUDGET = MAX_TOKENS * 65536
-# Subproblem size below which Hirschberg falls back to the full-matrix
-# backtrack (4M cells = 8 MB uint16).
-_BASE_CELLS = 1 << 22
 # Long-gold windowing: gold beyond MAX_TOKENS is scored window by
 # window and the flags unioned.  The overlap keeps matches whose
 # context straddles a boundary discoverable in the next window.
@@ -64,136 +77,79 @@ GOLD_OVERLAP = 512
 MAX_GOLD_WINDOWS = 16
 
 
-def _encode(x, y):
-    """Token -> int codes (vocab over x; y tokens absent from x -> -1)."""
-    vocab = {}
+def _masks(x, y):
+    """Symbol -> bit mask of its positions in ``y``, for the symbols of
+    ``y`` that also occur in ``x``.  Each mask is built once from its
+    position list (no per-position OR into a growing int)."""
+    in_x = set(x)
+    positions = {}
+    for j, tok in enumerate(y):
+        if tok in in_x:
+            positions.setdefault(tok, []).append(j)
+    masks = {}
+    for tok, js in positions.items():
+        buf = bytearray(js[-1] // 8 + 1)
+        for j in js:
+            buf[j >> 3] |= 1 << (j & 7)
+        masks[tok] = int.from_bytes(buf, 'little')
+    return masks
+
+
+def _rows(x, y):
+    """Bit rows ``V_0 .. V_m`` (module docstring).  A token absent from
+    ``y`` leaves the row unchanged, so its entry shares the previous
+    int."""
+    masks = _masks(x, y)
+    full = (1 << len(y)) - 1
+    v = full
+    rows = [v]
     for tok in x:
-        if tok not in vocab:
-            vocab[tok] = len(vocab)
-    xc = np.fromiter((vocab[t] for t in x), dtype=np.int64, count=len(x))
-    yc = np.fromiter((vocab.get(t, -1) for t in y), dtype=np.int64,
-                     count=len(y))
-    return xc, yc
-
-
-def _matrix(xc, yc):
-    """Full (m+1, n+1) uint16 LCS matrix over code arrays.
-
-    Values are bounded by min(m, n) <= sqrt(m*n) <= MAX_TOKENS whenever
-    this path is taken, so uint16 is safe.
-    """
-    m = len(xc)
-    n = len(yc)
-    c = np.zeros((m + 1, n + 1), dtype=np.uint16)
-    if m == 0 or n == 0:
-        return c
-    y_codes = set(yc.tolist())
-    y_codes.discard(-1)
-    for i in range(1, m + 1):
-        prev = c[i - 1]
-        xi = xc[i - 1]
-        if xi not in y_codes:
-            # x_i never matches: the row equals the previous row (the
-            # standard LCS identity) -- one memcpy instead of five
-            # vector ops.  Boilerplate-heavy documents skip most rows.
-            c[i] = prev
-            continue
-        match = yc == xi
-        cand = np.where(match, prev[:-1] + 1, prev[1:])
-        row = np.maximum(prev[1:], cand)
-        np.maximum.accumulate(row, out=row)
-        c[i, 1:] = row
-    return c
+        mask = masks.get(tok)
+        if mask is not None:
+            u = v & mask
+            v = ((v + u) | (v - u)) & full
+        rows.append(v)
+    return rows
 
 
 def longest_common_subsequence(x, y):
     """Full (m+1, n+1) uint16 LCS matrix over token lists."""
-    if len(x) == 0 or len(y) == 0:
-        return np.zeros((len(x) + 1, len(y) + 1), dtype=np.uint16)
-    xc, yc = _encode(x, y)
-    return _matrix(xc, yc)
+    m = len(x)
+    n = len(y)
+    c = np.zeros((m + 1, n + 1), dtype=np.uint16)
+    if m == 0 or n == 0:
+        return c
+    cols = np.arange(1, n + 1)
+    nbytes = (n + 7) // 8
+    for i, v in enumerate(_rows(x, y)):
+        bits = np.unpackbits(np.frombuffer(v.to_bytes(nbytes, 'little'),
+                                           dtype=np.uint8),
+                             count=n, bitorder='little')
+        c[i, 1:] = cols - np.cumsum(bits)
+    return c
 
 
-def _backtrack(x, y, xc, yc):
-    """Reference-tie-break backtrack over the full matrix
+def _inclusion(x, y):
+    """Reference-tie-break backtrack over the bit rows
     (lcs.pyx:78-103; vector pinned by tests/test_features.py)."""
-    c = _matrix(xc, yc)
+    rows = _rows(x, y)
     i = len(x)
     j = len(y)
     ret = []
-    while i > 0 or j > 0:
-        if i > 0 and j > 0 and x[i - 1] == y[j - 1]:
+    while i > 0:
+        if j == 0:
+            ret.extend([False] * i)
+            break
+        # highest column p < j with a step in row i: clear bit p of V_i
+        j = (~rows[i] & ((1 << j) - 1)).bit_length()
+        i -= 1
+        if j and y[j - 1] == x[i]:
             ret.append(True)
-            i -= 1
             j -= 1
-        elif j > 0 and (i == 0 or c[i][j - 1] >= c[i - 1][j]):
-            j -= 1
-        elif i > 0 and (j == 0 or c[i][j - 1] < c[i - 1][j]):
+        else:
             ret.append(False)
-            i -= 1
     ret.reverse()
     return ret
-
-
-def _last_row(xc, yc):
-    """Last row of the LCS matrix in O(n) space (int32)."""
-    n = len(yc)
-    prev = np.zeros(n + 1, dtype=np.int32)
-    if n == 0 or len(xc) == 0:
-        return prev
-    y_codes = set(yc.tolist())
-    y_codes.discard(-1)
-    cur = np.empty(n + 1, dtype=np.int32)
-    cur[0] = 0
-    for xi in xc:
-        if xi not in y_codes:
-            continue
-        match = yc == xi
-        cand = np.where(match, prev[:-1] + 1, prev[1:])
-        row = np.maximum(prev[1:], cand)
-        np.maximum.accumulate(row, out=row)
-        cur[1:] = row
-        prev, cur = cur, prev
-        cur[0] = 0
-    return prev
-
-
-def _hirschberg(x, y, xc, yc, out):
-    """Append inclusion flags for ``x`` vs ``y`` to ``out`` using
-    linear-space divide and conquer (Hirschberg 1975, CACM 18(6)).
-
-    Subproblems small enough for the full matrix use the exact
-    reference backtrack, so tie-breaking matches the reference
-    everywhere except across the (rare) ambiguous split boundaries of
-    oversized documents.
-    """
-    m = len(x)
-    n = len(y)
-    if m == 0:
-        return
-    if n == 0:
-        out.extend([False] * m)
-        return
-    if m * n <= _BASE_CELLS or m <= 2:
-        out.extend(_backtrack(x, y, xc, yc))
-        return
-    mid = m // 2
-    l1 = _last_row(xc[:mid], yc)
-    l2 = _last_row(xc[mid:][::-1], yc[::-1])
-    k = int(np.argmax(l1 + l2[::-1]))
-    _hirschberg(x[:mid], y[:k], xc[:mid], yc[:k], out)
-    _hirschberg(x[mid:], y[k:], xc[mid:], yc[k:], out)
-
-
-def _inclusion(xs, ys):
-    """Inclusion flags for ``xs`` vs ``ys``, full-matrix backtrack when
-    it fits, Hirschberg otherwise."""
-    xc, yc = _encode(xs, ys)
-    if len(xs) * len(ys) <= MAX_TOKENS * MAX_TOKENS:
-        return _backtrack(xs, ys, xc, yc)
-    flags = []
-    _hirschberg(xs, ys, xc, yc, flags)
-    return flags
 
 
 def check_inclusion_ex(x, y):

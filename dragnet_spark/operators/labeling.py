@@ -16,12 +16,15 @@ second blockify pass: one join + one Arrow stage end-to-end.
 
 Scale notes: the doc_id join is the single wide op in training; AQE
 skew-join handles the host-prefix skew, and the Arrow stage is narrow
-after it.  LCS is O(m*n) per doc and bounded by the uint16 token cap.
+after it.  LCS is O(m*n/word) bit-parallel work per doc, capped at
+``kernels/lcs.py`` ``CELL_BUDGET`` cells (tokens past the cap are
+unknown, not unmatched).
 """
 
 from __future__ import annotations
 
 from functools import partial
+from itertools import compress
 
 import pyarrow as pa
 
@@ -51,9 +54,10 @@ GOLD_BLOCKS_PA_SCHEMA = pa.schema([
 ])
 
 
-def _frac_and_tokens(blocks_tokens, all_tokens, block_ids, gs_text):
+def _frac_and_tokens(blocks_tokens, all_tokens, gs_text):
     """data_processing.py:150-177 equivalent, truncation-aware.
 
+    ``all_tokens`` is ``blocks_tokens`` flattened in order.
     ``check_inclusion_ex`` bounds the per-document LCS cost
     (lcs.py CELL_BUDGET).  Unknown is never silently 0:
 
@@ -75,22 +79,20 @@ def _frac_and_tokens(blocks_tokens, all_tokens, block_ids, gs_text):
         fracs = [0.0 if not blocks_tokens[i] else None
                  for i in range(n_blocks)]
         return fracs, [[] for _ in range(n_blocks)], True
-    counts = [0] * n_blocks
-    covered = [0] * n_blocks
-    matched = [[] for _ in range(n_blocks)]
-    for token, inc, block_id in zip(all_tokens, inclusion, block_ids):
-        covered[block_id] += 1
-        if inc:
-            counts[block_id] += 1
-            matched[block_id].append(token)
     fracs = []
-    for i in range(n_blocks):
-        if not blocks_tokens[i]:
+    matched = []
+    start = 0
+    for tokens in blocks_tokens:
+        flags = inclusion[start:start + len(tokens)]  # covered part
+        start += len(tokens)
+        hits = list(compress(tokens, flags))
+        matched.append(hits)
+        if not tokens:
             fracs.append(0.0)
-        elif covered[i] == 0:
+        elif not flags:
             fracs.append(None)  # entirely past the cap: unknown
         else:
-            fracs.append(counts[i] / covered[i])
+            fracs.append(len(hits) / len(flags))
     return fracs, matched, truncated
 
 
@@ -101,16 +103,12 @@ def label_document(doc_id, spans, content_text, comments_text,
     if status != STATUS_OK or not all_blocks:
         return []
     blocks_tokens = [simple_tokenizer(b.text) for b in all_blocks]
-    flat_tokens = []
-    flat_ids = []
-    for i, toks in enumerate(blocks_tokens):
-        flat_tokens.extend(toks)
-        flat_ids.extend([i] * len(toks))
+    flat_tokens = [t for toks in blocks_tokens for t in toks]
 
     c_fracs, c_matched, c_trunc = _frac_and_tokens(
-        blocks_tokens, flat_tokens, flat_ids, content_text or '')
+        blocks_tokens, flat_tokens, content_text or '')
     m_fracs, m_matched, m_trunc = _frac_and_tokens(
-        blocks_tokens, flat_tokens, flat_ids, comments_text or '')
+        blocks_tokens, flat_tokens, comments_text or '')
     truncated = c_trunc or m_trunc
 
     try:
